@@ -47,6 +47,7 @@ regressions):
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -65,49 +66,7 @@ def main() -> None:
     from confidential_storm_spark.session import get_spark
 
     spark = get_spark(app_name="csspark-bench")
-    # steady-state warm-up (untimed): first-query costs are session
-    # boot, not query cost — exercise codegen, a real parquet scan +
-    # shuffle, and the Arrow python-worker pool once before timing
-    spark.range(1).count()
-    from pyspark.sql.functions import col, pandas_udf
-
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
-        "l_returnflag"
-    ).count().collect()
-    _warm = pandas_udf(lambda s: s, "long")
-    spark.range(10_000).repartition(64).select(_warm(col("id"))).count()
-    # grouped-map (applyInPandas) workers and window machinery warm
-    # up separately from scalar pandas UDFs
-    from pyspark.sql import Window
-    from pyspark.sql.functions import sum as fsum
-
-    wdf = spark.range(2048).select((col("id") % 32).alias("b"), col("id").alias("v"))
-    wdf.groupBy("b").applyInPandas(lambda pdf: pdf.head(1), "b long, v long").count()
-    wdf.select(fsum("v").over(Window.partitionBy("b").orderBy("v"))).count()
-    # crypto library import + one AEAD round trip (the sec_* queries'
-    # driver-side artifact decrypt pays the import otherwise)
-    from cryptography.hazmat.primitives.ciphers.aead import AESGCM
-
-    _k = b"\x00" * 32
-    AESGCM(_k).decrypt(b"\x00" * 12, AESGCM(_k).encrypt(b"\x00" * 12, b"warm", None), None)
-    # driver-side createDataFrame path (py4j local-relation transfer)
-    # — the topology-edge queries pay its first-use cost otherwise
-    spark.createDataFrame([("w", "w")], "x string, y string").count()
-    # media-codec worker imports (jpeg/png/wav/y4m synth + decode):
-    # the dedup_media_* queries otherwise pay the per-worker import on
-    # their first run (measured ~4 s of a 5.5 s cold run at sf0.1) —
-    # a 32-partition 32-row corpus touches every pooled worker once
-    from confidential_storm_spark.operators.mediahash import (
-        audio_energy_hashes,
-        image_blockmean_hashes,
-        media_corpus,
-        sample_video_frames,
-    )
-
-    _mw = spark.range(32).repartition(32).selectExpr("id AS doc_id")
-    image_blockmean_hashes(media_corpus(_mw, "image")).count()
-    audio_energy_hashes(media_corpus(_mw, "audio")).count()
-    sample_video_frames(media_corpus(_mw, "video")).count()
+    warm_session(spark, sf_dir)
     # standing artifacts (IVF index table, encrypted topology graph):
     # maintained outside the query path, built once if absent
     t0 = time.perf_counter()
@@ -123,32 +82,16 @@ def main() -> None:
     noisy_runs = int(os.environ.get("SPARK_GRAFT_BENCH_NOISY_RUNS", "7"))
     qs = build_queries()
     samples: dict[str, list[float]] = {name: [] for name in qs}
-    import gc
-
-    def run_one(name: str, tag: str) -> float:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        n = df.count()
-        dt = round(time.perf_counter() - t0, 3)
-        print(f"# {tag} {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
-        # drop the py4j refs NOW: localCheckpoint blocks from the
-        # dedup/graph queries stay pinned in the block manager
-        # until the driver-side DataFrame is garbage-collected,
-        # and letting them pile up across ~300 executions
-        # inflates the late queries 3-7x with GC pressure
-        del df
-        gc.collect()
-        return dt
 
     # full discarded pass(es): first-execution costs are setup, not
     # query cost — without this they land in some query's max and
     # fake a 2-3x spread
     for w in range(warmup_runs):
         for name in qs:
-            run_one(name, f"warmup{w}")
+            run_query(spark, name, qs[name], sf_dir, f"warmup{w}")
     for run in range(n_runs):
         for name in qs:
-            samples[name].append(run_one(name, f"run{run}"))
+            samples[name].append(run_query(spark, name, qs[name], sf_dir, f"run{run}"))
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -163,7 +106,9 @@ def main() -> None:
     # gets more observations so its median rests on 5+ samples
     for name in list(qs):
         while spread_ratio(samples[name]) > noisy_spread and len(samples[name]) < noisy_runs:
-            samples[name].append(run_one(name, f"extra{len(samples[name])}"))
+            samples[name].append(
+                run_query(spark, name, qs[name], sf_dir, f"extra{len(samples[name])}")
+            )
 
     import statistics
 
@@ -226,6 +171,73 @@ def main() -> None:
             }
         )
     )
+
+
+def warm_session(spark, sf_dir: str) -> None:
+    """Steady-state warm-up (untimed): first-query costs are session
+    boot, not query cost — exercise codegen, a real parquet scan +
+    shuffle, and the Arrow python-worker pool once before timing."""
+    spark.range(1).count()
+    from pyspark.sql.functions import col, pandas_udf
+
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
+        "l_returnflag"
+    ).count().collect()
+    _warm = pandas_udf(lambda s: s, "long")
+    spark.range(10_000).repartition(64).select(_warm(col("id"))).count()
+    # grouped-map (applyInPandas) workers and window machinery warm
+    # up separately from scalar pandas UDFs
+    from pyspark.sql import Window
+    from pyspark.sql.functions import sum as fsum
+
+    wdf = spark.range(2048).select((col("id") % 32).alias("b"), col("id").alias("v"))
+    wdf.groupBy("b").applyInPandas(lambda pdf: pdf.head(1), "b long, v long").count()
+    wdf.select(fsum("v").over(Window.partitionBy("b").orderBy("v"))).count()
+    # crypto library import + one AEAD round trip (the sec_* queries'
+    # driver-side artifact decrypt pays the import otherwise)
+    from cryptography.hazmat.primitives.ciphers.aead import AESGCM
+
+    _k = b"\x00" * 32
+    AESGCM(_k).decrypt(b"\x00" * 12, AESGCM(_k).encrypt(b"\x00" * 12, b"warm", None), None)
+    # driver-side createDataFrame path (py4j local-relation transfer)
+    # — the topology-edge queries pay its first-use cost otherwise
+    spark.createDataFrame([("w", "w")], "x string, y string").count()
+    # media-codec worker imports (jpeg/png/wav/y4m synth + decode):
+    # the dedup_media_* queries otherwise pay the per-worker import on
+    # their first run (measured ~4 s of a 5.5 s cold run at sf0.1) —
+    # a 32-partition 32-row corpus touches every pooled worker once
+    from confidential_storm_spark.operators.mediahash import (
+        audio_energy_hashes,
+        image_blockmean_hashes,
+        media_corpus,
+        sample_video_frames,
+    )
+
+    _mw = spark.range(32).repartition(32).selectExpr("id AS doc_id")
+    image_blockmean_hashes(media_corpus(_mw, "image")).count()
+    audio_energy_hashes(media_corpus(_mw, "audio")).count()
+    sample_video_frames(media_corpus(_mw, "video")).count()
+
+
+def run_query(spark, name: str, fn, sf_dir: str, tag: str) -> float:
+    """Build registry query ``name`` with ``fn(spark, sf_dir)``, run it
+    to completion with ``count()`` and return the wall seconds of both.
+    Its jobs run under job group ``name`` (description ``tag``), so
+    Spark's UI and event log attribute them to the query."""
+    spark.sparkContext.setJobGroup(name, tag)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    n = df.count()
+    dt = round(time.perf_counter() - t0, 3)
+    print(f"# {tag} {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
+    # drop the py4j refs NOW: localCheckpoint blocks from the
+    # dedup/graph queries stay pinned in the block manager
+    # until the driver-side DataFrame is garbage-collected,
+    # and letting them pile up across ~300 executions
+    # inflates the late queries 3-7x with GC pressure
+    del df
+    gc.collect()
+    return dt
 
 
 if __name__ == "__main__":

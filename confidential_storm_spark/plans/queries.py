@@ -7921,7 +7921,8 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     token mass at that rank is mass_start + rn * n exactly (every row
     of a class adds the same n).  Values are integer-exact and
     identical to the global-window form, which lives on as
-    `_text_vocab_coverage_window` (differential pytest)."""
+    `_text_vocab_coverage_window` in tests/test_ranks.py (differential
+    pytest)."""
     from ..functions.text import explode_words
     from ..operators.ranks import attach_rank_ranges
 
@@ -7952,34 +7953,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 (F.col("_mass_start") + F.col("_rn") * F.col("n")) / F.col("_t"), 6
             ).alias("cum_share"),
-        )
-        .orderBy("rank")
-    )
-
-
-def _text_vocab_coverage_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The literal global-window form of `text_vocab_coverage` (cumsum
-    under a total order, single sorted partition) — kept as the pytest
-    oracle for the spectrum decomposition the registry entry now
-    runs."""
-    from ..functions.text import explode_words
-
-    wc = (
-        explode_words(load_table(spark, sf_dir, "documents"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = wc.agg(F.sum("n").alias("_t"))
-    order = [F.desc("n"), F.col("word")]
-    w_rank = Window.orderBy(*order)
-    w_cum = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        wc.crossJoin(F.broadcast(tot))
-        .select(
-            F.row_number().over(w_rank).alias("rank"),
-            "word",
-            "n",
-            F.round(F.sum("n").over(w_cum) / F.col("_t"), 6).alias("cum_share"),
         )
         .orderBy("rank")
     )
@@ -8874,7 +8847,7 @@ def q_order_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the placed side is the canonical fact-fact equi-join
     (lineitem × orders on orderkey — hash-distributed, skew-free per
     `q_skew_profile`, and exchange-free under the bucketed layout
-    `tools/bucketed_join_ab.py` measures); both sides then collapse
+    `benchmark/bucketed_join_ab.csv` measures); both sides then collapse
     to ~|months| rows BEFORE the full-outer alignment and running
     sums, so the window work is constant-size at any SF."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -9075,44 +9048,9 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-identical against this entry's own DuckDB twin in round 11, so
     adopting its plan changes nothing the oracle hashes (VERDICT r11
     next-round #3).  The window form it replaces lives on as
-    `_q_customer_rfm_window`, differentially tested against this entry
-    in tests/test_wave10.py."""
+    `_q_customer_rfm_window` in tests/test_wave10.py, differentially
+    tested against this entry there."""
     return q_customer_rfm_scalable(spark, sf_dir)
-
-
-def _q_customer_rfm_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The literal three-global-ntile-window form of `q_customer_rfm`
-    (the declarative spec, single-partition windows over |customers|
-    rows) — kept as the pytest oracle for the scalable decomposition
-    the registry entry now runs."""
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.max("o_orderdate").alias("_last"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.round(F.sum(F.col("o_totalprice").cast(_PRICE_D)), 2)
-        .cast("double")
-        .alias("monetary"),
-    )
-    corpus_max = orders.agg(F.max("o_orderdate").alias("_maxd"))
-    base = base.crossJoin(F.broadcast(corpus_max)).withColumn(
-        "recency_days", F.datediff("_maxd", "_last")
-    )
-    r_w = Window.orderBy(F.col("recency_days").desc(), "custkey")
-    f_w = Window.orderBy(F.col("frequency").asc(), "custkey")
-    m_w = Window.orderBy(F.col("monetary").asc(), "custkey")
-    scored = base.select(
-        "custkey",
-        "recency_days",
-        "frequency",
-        "monetary",
-        F.ntile(5).over(r_w).alias("r_score"),
-        F.ntile(5).over(f_w).alias("f_score"),
-        F.ntile(5).over(m_w).alias("m_score"),
-    )
-    return scored.withColumn(
-        "segment",
-        F.concat(F.col("r_score"), F.col("f_score"), F.col("m_score")).cast("string"),
-    ).orderBy("custkey")
 
 
 CUSTOMER_RFM_SQL = """
@@ -10248,33 +10186,8 @@ def shard_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     against this entry's own NTILE twin in round 11, so adopting its
     plan changes nothing the oracle hashes (VERDICT r11 next-round
     #3).  The window form lives on as `_shard_boundaries_window`,
-    differentially tested in tests/test_ranks.py."""
+    differentially tested in tests/test_wave10.py."""
     return shard_boundaries_scalable(spark, sf_dir)
-
-
-def _shard_boundaries_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The literal global-NTILE-window form of `shard_boundaries` (the
-    declarative spec, single-partition window over the orders fact) —
-    kept as the pytest oracle for the scalable decomposition the
-    registry entry now runs."""
-    orders = load_table(spark, sf_dir, "orders")
-    wnd = Window.orderBy("o_orderdate", "o_orderkey")
-    t = orders.select(
-        "o_orderkey",
-        "o_orderdate",
-        F.ntile(_SHARD_N).over(wnd).alias("shard"),
-    )
-    return (
-        t.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias("date_lo"),
-            F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias("date_hi"),
-            F.min("o_orderkey").alias("key_lo"),
-            F.max("o_orderkey").alias("key_hi"),
-        )
-        .orderBy("shard")
-    )
 
 
 shard_boundaries.__doc__ = shard_boundaries.__doc__.format(n=_SHARD_N)

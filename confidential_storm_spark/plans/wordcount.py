@@ -24,39 +24,9 @@ from ..functions.text import words
 from ..operators.dp_batch import DPParams
 from ..streaming.stateful import bound_contributions_stream, dp_histogram_stream
 
-__all__ = ["WORDCOUNT_PARAMS", "wordcount_topology"]
+__all__ = ["WORDCOUNT_PARAMS", "run_wordcount_two_stage"]
 
 WORDCOUNT_PARAMS = dict(epsilon=8.0, delta=1e-6, c=100, t=12, mu=15)
-
-
-def wordcount_topology(
-    documents: DataFrame,
-    params: DPParams | None = None,
-    text_col: str = "text",
-    user_col: str = "user_id",
-    max_contributions: int = 100,
-    num_buckets: int = 4,
-) -> DataFrame:
-    """Assemble the streaming word-count DP pipeline on a (streaming)
-    documents DataFrame; returns the streaming histogram DataFrame
-    (write with ``foreachBatch(histogram_file_sink(...))``)."""
-    if params is None:
-        params = DPParams.from_budget(
-            WORDCOUNT_PARAMS["epsilon"],
-            WORDCOUNT_PARAMS["delta"],
-            c=WORDCOUNT_PARAMS["c"],
-            t=WORDCOUNT_PARAMS["t"],
-            mu=WORDCOUNT_PARAMS["mu"],
-        )
-    # P1: split -> one row per word with count 1
-    word_rows = documents.select(
-        F.col(user_col).cast("string").alias("user_id"),
-        F.explode(words(F.col(text_col))).alias("key"),
-    ).withColumn("value", F.lit(1.0))
-    # A2: per-user bound (state sharded by user hash)
-    bounded = bound_contributions_stream(word_rows, max_contributions, user_col="user_id")
-    # A1-A13: DP mechanism keyed by word
-    return dp_histogram_stream(bounded, params, num_buckets=num_buckets)
 
 
 def run_wordcount_two_stage(
@@ -83,13 +53,7 @@ def run_wordcount_two_stage(
     ``sink`` is None an in-memory collector is used).
     """
     if params is None:
-        params = DPParams.from_budget(
-            WORDCOUNT_PARAMS["epsilon"],
-            WORDCOUNT_PARAMS["delta"],
-            c=WORDCOUNT_PARAMS["c"],
-            t=WORDCOUNT_PARAMS["t"],
-            mu=WORDCOUNT_PARAMS["mu"],
-        )
+        params = DPParams.from_budget(**WORDCOUNT_PARAMS)
     spark = documents.sparkSession
     word_rows = documents.select(
         F.col(user_col).cast("string").alias("user_id"),

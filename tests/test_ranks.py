@@ -9,11 +9,14 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from confidential_storm_spark.operators.ranks import (
     attach_rank_ranges,
     log_rank_power_sums,
 )
+from confidential_storm_spark.sources import load_table
 
 
 def _spectrum(spark, pairs):
@@ -226,14 +229,39 @@ def test_attach_rank_ranges_extra_size_cols(spark):
     assert got == {5: (0, 0), 4: (2, 10), 2: (5, 22), 1: (6, 24)}
 
 
+def _text_vocab_coverage_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The literal global-window form of `text_vocab_coverage` (cumsum
+    under a total order, single sorted partition) — kept as the pytest
+    oracle for the spectrum decomposition the registry entry now
+    runs."""
+    from confidential_storm_spark.functions.text import explode_words
+
+    wc = (
+        explode_words(load_table(spark, sf_dir, "documents"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    tot = wc.agg(F.sum("n").alias("_t"))
+    order = [F.desc("n"), F.col("word")]
+    w_rank = Window.orderBy(*order)
+    w_cum = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    return (
+        wc.crossJoin(F.broadcast(tot))
+        .select(
+            F.row_number().over(w_rank).alias("rank"),
+            "word",
+            "n",
+            F.round(F.sum("n").over(w_cum) / F.col("_t"), 6).alias("cum_share"),
+        )
+        .orderBy("rank")
+    )
+
+
 def test_text_vocab_coverage_matches_window_form(spark, sf_dir):
     """Round-12 swap: the registry entry computes rank and cumulative
     share from the frequency spectrum (no unpartitioned window); it
     must stay row-identical to the literal global-window form."""
-    from confidential_storm_spark.plans.queries import (
-        _text_vocab_coverage_window,
-        text_vocab_coverage,
-    )
+    from confidential_storm_spark.plans.queries import text_vocab_coverage
 
     got = [tuple(r) for r in text_vocab_coverage(spark, sf_dir).collect()]
     want = [tuple(r) for r in _text_vocab_coverage_window(spark, sf_dir).collect()]

@@ -11,6 +11,11 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from confidential_storm_spark.plans.queries import _PRICE_D, _SHARD_N
+from confidential_storm_spark.sources import load_table
 
 
 def _write(spark, tmp_path, name, df):
@@ -302,14 +307,71 @@ def test_docs_perplexity_eval_matches_hand_lm(spark, tmp_path):
 # ------------------------------------------- round-12 swap equivalence
 
 
+def _q_customer_rfm_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The literal three-global-ntile-window form of `q_customer_rfm`
+    (the declarative spec, single-partition windows over |customers|
+    rows) — kept as the pytest oracle for the scalable decomposition
+    the registry entry now runs."""
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
+        F.max("o_orderdate").alias("_last"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.round(F.sum(F.col("o_totalprice").cast(_PRICE_D)), 2)
+        .cast("double")
+        .alias("monetary"),
+    )
+    corpus_max = orders.agg(F.max("o_orderdate").alias("_maxd"))
+    base = base.crossJoin(F.broadcast(corpus_max)).withColumn(
+        "recency_days", F.datediff("_maxd", "_last")
+    )
+    r_w = Window.orderBy(F.col("recency_days").desc(), "custkey")
+    f_w = Window.orderBy(F.col("frequency").asc(), "custkey")
+    m_w = Window.orderBy(F.col("monetary").asc(), "custkey")
+    scored = base.select(
+        "custkey",
+        "recency_days",
+        "frequency",
+        "monetary",
+        F.ntile(5).over(r_w).alias("r_score"),
+        F.ntile(5).over(f_w).alias("f_score"),
+        F.ntile(5).over(m_w).alias("m_score"),
+    )
+    return scored.withColumn(
+        "segment",
+        F.concat(F.col("r_score"), F.col("f_score"), F.col("m_score")).cast("string"),
+    ).orderBy("custkey")
+
+
+def _shard_boundaries_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The literal global-NTILE-window form of `shard_boundaries` (the
+    declarative spec, single-partition window over the orders fact) —
+    kept as the pytest oracle for the scalable decomposition the
+    registry entry now runs."""
+    orders = load_table(spark, sf_dir, "orders")
+    wnd = Window.orderBy("o_orderdate", "o_orderkey")
+    t = orders.select(
+        "o_orderkey",
+        "o_orderdate",
+        F.ntile(_SHARD_N).over(wnd).alias("shard"),
+    )
+    return (
+        t.groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias("date_lo"),
+            F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias("date_hi"),
+            F.min("o_orderkey").alias("key_lo"),
+            F.max("o_orderkey").alias("key_hi"),
+        )
+        .orderBy("shard")
+    )
+
+
 def test_q_customer_rfm_matches_window_form(spark, sf_dir):
     """Round-12 swap (VERDICT r11 #3): the registry entry now computes
     via the spectrum-cumsum decomposition; it must stay row-identical
     to the literal three-global-ntile-window form it replaced."""
-    from confidential_storm_spark.plans.queries import (
-        _q_customer_rfm_window,
-        q_customer_rfm,
-    )
+    from confidential_storm_spark.plans.queries import q_customer_rfm
 
     got = [tuple(r) for r in q_customer_rfm(spark, sf_dir).collect()]
     want = [tuple(r) for r in _q_customer_rfm_window(spark, sf_dir).collect()]
@@ -319,10 +381,7 @@ def test_q_customer_rfm_matches_window_form(spark, sf_dir):
 def test_shard_boundaries_matches_window_form(spark, sf_dir):
     """Same swap for the shard planner: spectrum cumsum + boundary-date
     refinement must reproduce the global-NTILE window relation."""
-    from confidential_storm_spark.plans.queries import (
-        _shard_boundaries_window,
-        shard_boundaries,
-    )
+    from confidential_storm_spark.plans.queries import shard_boundaries
 
     got = [tuple(r) for r in shard_boundaries(spark, sf_dir).collect()]
     want = [tuple(r) for r in _shard_boundaries_window(spark, sf_dir).collect()]

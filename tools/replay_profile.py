@@ -5,9 +5,11 @@ Phases measured per query (one warm session):
                 (approximated: total minus the instrumented pieces)
   epoch_write   write_epoch_source (driver-side pyarrow writes)
   stream_exec   start() .. awaitTermination (micro-batch loop)
-  per-batch     batch timestamps from the foreachBatch sink
   fold+convert  latest_per fold + createDataFrame back to Spark
   action        the final .count()
+
+Each run goes through bench.py's warm-up and timed step
+(``bench.run_query``); the phases are hooks around it.
 
 Usage: python tools/replay_profile.py [--sf-dir DIR] query [query ...]
 """
@@ -20,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import run_query, warm_session  # noqa: E402
 
 
 def main() -> int:
@@ -36,26 +40,17 @@ def main() -> int:
     from confidential_storm_spark.streaming import replay as R
 
     spark = get_spark(app_name="replay-profile")
-    spark.range(1).count()
-    # warm the pandas-UDF worker pool and the streaming machinery once
+    warm_session(spark, args.sf_dir)
     qs = build_queries()
 
     marks: dict[str, float] = {}
-    batch_times: list[float] = []
 
     orig_write = R.write_epoch_source
-    orig_replay = R.replay_available_now
 
     def timed_write(df, epoch_col, out_dir):
         t0 = time.perf_counter()
         out = orig_write(df, epoch_col, out_dir)
         marks["epoch_write"] = marks.get("epoch_write", 0.0) + time.perf_counter() - t0
-        return out
-
-    def timed_replay(spark_, input_df, epoch_col, transform, **kw):
-        t0 = time.perf_counter()
-        out = orig_replay(spark_, input_df, epoch_col, transform, **kw)
-        marks["replay_total"] = marks.get("replay_total", 0.0) + time.perf_counter() - t0
         return out
 
     R.write_epoch_source = timed_write
@@ -85,21 +80,26 @@ def main() -> int:
 
     StreamingQuery.awaitTermination = timed_await
 
+    def timed_build(fn):
+        def build(spark_, sf_dir):
+            t0 = time.perf_counter()
+            df = fn(spark_, sf_dir)
+            marks["build"] = time.perf_counter() - t0
+            return df
+
+        return build
+
     for name in args.queries:
         for run in range(args.runs):
             marks.clear()
-            batch_times.clear()
-            t0 = time.perf_counter()
-            df = qs[name](spark, args.sf_dir)
-            t_build = time.perf_counter() - t0
-            n = df.count()
-            t_total = time.perf_counter() - t0
+            t_total = run_query(spark, name, timed_build(qs[name]), args.sf_dir, f"run{run}")
+            t_build = marks["build"]
             rest = t_build - marks.get("epoch_write", 0.0) - marks.get("stream_exec", 0.0)
             print(
                 f"{name} run{run}: total={t_total:.2f}s action={t_total - t_build:.2f}s"
                 f" epoch_write={marks.get('epoch_write', 0):.2f}s"
                 f" stream_exec={marks.get('stream_exec', 0):.2f}s"
-                f" build_rest(input+fold+convert)={rest:.2f}s rows={n}"
+                f" build_rest(input+fold+convert)={rest:.2f}s"
             )
     return 0
 
