@@ -139,8 +139,11 @@ def main() -> None:
     # main run's per-query medians — PERF_r11 got n_common=0.  Detail
     # now lands in bench_detail_sf{sf}_c{cpus}.json (one file per
     # config, nothing clobbers anything); the legacy un-suffixed path
-    # is still written for any reader of the old name.
+    # is still written for any reader of the old name.  Unset means
+    # local[*]: name the file with the core count that master uses.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if cpus == "*":
+        cpus = os.cpu_count()
     base_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "benchmark")
     detail_path = os.path.join(base_dir, f"bench_detail_sf{sf}_c{cpus}.json")
     try:

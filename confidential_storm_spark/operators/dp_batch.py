@@ -20,6 +20,17 @@ and new-unique-user information.  The plan:
    how one reference DP-bolt replica owns many keys' trees
    (StreamingDPMechanism.java:34-72).  State per key = two numpy
    trees + <= T+1 round counters — nothing user-proportional.
+   The buckets are first repartitioned by number into one task per
+   core (``min(num_buckets, defaultParallelism)``): AQE never
+   coalesces that exchange (left to itself it folds this small input
+   into ONE task), and ``groupBy(bucket)`` reuses its partitioning.
+   ``num_buckets`` is the noise-seeding and state unit, not the task
+   count — every Python task has a fixed cost, so a task per bucket
+   is slower than a task per core.
+3. The released histogram (one row per released key) is sorted in a
+   single partition.  A global ``orderBy`` would range-partition it,
+   and its sampling job re-runs the whole mechanism stage; this way
+   the mechanism runs exactly once per action.
 
 Scale: the bucket count bounds per-task state; at 100 TB the bucket
 column doubles as the shuffle key so skewed keys spread by hash, and
@@ -110,11 +121,18 @@ def dp_histogram_batch(
     num_buckets: int = 64,
 ) -> DataFrame:
     """Run the full DP-SQLP mechanism over an epoch-partitioned batch;
-    returns the final released histogram ``(key, count)`` sorted desc.
+    returns the final released histogram ``(key, count)`` in one
+    partition, ordered by ``count`` desc then ``key``.
 
     Input must already be clamped + C-bounded (use
     ``operators.bounding.bounded_clamped``), matching the reference
     pipeline order bounding -> perturbation -> aggregation.
+
+    Keys are split into ``num_buckets`` buckets by ``crc32(key)``; each
+    bucket runs its own mechanism, seeded by ``(seed, bucket)``, so the
+    noise depends on the bucket alone.  The buckets share one Python
+    task per core and the mechanism stage runs once per action, so
+    neither the task layout nor the final sort changes the output.
     """
     # SINGLE-PASS pre-aggregation: one (key, user) aggregate yields both
     # the per-(key, epoch) totals and the previous-contribution-epoch
@@ -196,5 +214,10 @@ def dp_histogram_batch(
             hist = mech.snapshot()
         return pd.DataFrame({"key": list(hist.keys()), "count": list(hist.values())})
 
-    out = windowed.groupBy("bucket").applyInPandas(run_bucket, schema="key string, count long")
-    return out.orderBy(F.desc("count"), "key")
+    tasks = min(num_buckets, contribs.sparkSession.sparkContext.defaultParallelism)
+    out = (
+        windowed.repartition(tasks, "bucket")
+        .groupBy("bucket")
+        .applyInPandas(run_bucket, schema="key string, count long")
+    )
+    return out.repartition(1).sortWithinPartitions(F.desc("count"), "key")

@@ -75,6 +75,8 @@ _SPREAD_TABLES = {"documents"}
 # computes from the parquet files (no data or result is cached), and
 # the size+mtime key invalidates the entry the moment anything
 # rewrites the table (an overwritten table gets a fresh file index).
+# A directory-layout table is never memoized: its top-level mtime does
+# not change when a nested file is rewritten in place.
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 _TABLE_MEMO_MAX = 256
 
@@ -83,6 +85,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import os as _os
 
     path_ = f"{sf_dir}/{name}.parquet"
+    if _os.path.isdir(path_):
+        return _load_table_uncached(spark, sf_dir, name)
     try:
         st = _os.stat(path_)
         sig: tuple = (st.st_size, st.st_mtime_ns)
